@@ -14,9 +14,11 @@ import graft.sinks.Writers
   * player-list truncation (L1) → windowed per-player matchList fan-out
   * under [[Resilience.guardedFetch]] → match-id dedup (A1) → envelope
   * write with retry (`fetcher.py:139-170`) → failed-player leftover
-  * persistence (K8). CrawlSpec drives the whole flow over fixture
-  * fetchers through [[Windows.step]], like PipelineSpec does for the
-  * Lambda ETL.
+  * persistence (K8) → the processor's match walk, landing 200/50-doc
+  * batches under `outRoot/<type>/batch_<start>_<end>_<n>` (one key per
+  * run window, so consecutive runs into one root keep every batch).
+  * CrawlSpec drives the whole flow over fixture fetchers through
+  * [[Windows.step]], like PipelineSpec does for the Lambda ETL.
   *
   * Spark-first split of labor: the page/tier FETCHES are driver-side
   * externals (a rate-limited REST API is inherently sequential — same
@@ -159,60 +161,6 @@ object Crawl {
       }
     }
 
-  /** The matchList fan-out DISTRIBUTED — the 100 TB analog of
-    * [[fetchMatchLists]]: the reference's loop is driver-sequential
-    * (`EC2/fetcher.py:111-134`, one container, one API budget), which is
-    * faithful but caps throughput at one in-flight request. At fleet
-    * scale the puuid list is a Dataset fanned out over `numSlices`
-    * partitions, and each partition runs the SAME guarded fetch
-    * (limiter → breaker → retry/backoff) under a per-partition SLICE of
-    * the request budget: every `(maxRequests, windowSec)` limit becomes
-    * `(maxRequests / numSlices, windowSec)` locally, so the aggregate
-    * across all partitions never exceeds the global budget — no
-    * coordination, no shared state, the slice IS the contract (the same
-    * move as the per-source token budget: global invariant enforced by
-    * partition-local arithmetic). `numSlices` must not exceed the
-    * tightest window's budget, or a slice would round to zero requests.
-    *
-    * Limiter/breaker/clock are CREATED on the executor (factory, not
-    * instance — driver-side state can't travel); failures surface as
-    * `failed = true` rows for the same K8 leftover persistence the
-    * driver form feeds. CrawlSpec proves the envelope equals the
-    * driver form's and that each partition's request times respect its
-    * slice under a deterministic clock. */
-  def fetchMatchListsDistributed(puuids: DataFrame, window: Windows.WindowState,
-      fetch: (String, Windows.WindowState) => Resilience.Outcome[Seq[String]],
-      limits: Seq[(Int, Long)], numSlices: Int,
-      maxRetries: Int = 3, failureThreshold: Int = 5,
-      recoveryTimeoutSec: Long = 60L,
-      clockFactory: () => Resilience.Clock = () => Resilience.Clock.system)
-      : DataFrame = {
-    require(numSlices > 0, s"numSlices=$numSlices")
-    val tightest = limits.map(_._1).min
-    require(numSlices <= tightest,
-      s"numSlices=$numSlices exceeds the tightest window budget $tightest — " +
-        "a slice needs at least one request per window")
-    val sliced = limits.map { case (maxReq, win) => (maxReq / numSlices, win) }
-    val spark = puuids.sparkSession
-    import spark.implicits._
-    puuids.select(col("puuid")).as[String]
-      .repartition(numSlices)
-      .mapPartitions { it =>
-        val clock = clockFactory()
-        val limiter = new Resilience.SlidingWindowRateLimiter(sliced, clock)
-        val breaker = new Resilience.CircuitBreaker(failureThreshold,
-          recoveryTimeoutSec, clock)
-        it.map { p =>
-          Resilience.guardedFetch(limiter, breaker, maxRetries, clock)(
-            _ => fetch(p, window)) match {
-            case Some(ids) => (p, ids, false)
-            case None      => (p, Seq.empty[String], true)
-          }
-        }
-      }
-      .toDF("puuid", "matchIds", "failed")
-  }
-
   /** The envelope the fetcher uploads (`fetcher.py:141-146`): ONE row
     * `{ranked_map: {puuid: stats…}, matchlist: [distinct ids]}` — the
     * rank map as a JSON object keyed by puuid, the match ids deduped
@@ -276,7 +224,10 @@ object Crawl {
     *
     * `land` receives (parsed batch, data_collection_type, batch index)
     * — production lands hive-partitioned envelopes via [[Writers]]; the
-    * default dumps JSON under `outRoot/<type>/batch_<n>`. The fetch
+    * default dumps JSON under `outRoot/<type>/batch_<start>_<end>_<n>`,
+    * keyed by the run's window so a later run into the same root never
+    * overwrites an earlier run's batches (the reference's S3 keys carry
+    * a timestamp for the same reason, `Utils/S3.py:101-109`). The fetch
     * loop is driver-side and rate-limited like the reference's; each
     * flushed batch is a distributed parse+write. */
   def runProcessor(spark: SparkSession, outRoot: String, matchlistKey: String,
@@ -293,7 +244,8 @@ object Crawl {
     import spark.implicits._
     val landFn = Option(land).getOrElse {
       (df: DataFrame, kind: String, n: Int) =>
-        Writers.jsonDump(df, s"$outRoot/$kind/batch_$n")
+        Writers.jsonDump(df,
+          s"$outRoot/$kind/batch_${window.startEpoch}_${window.endEpoch}_$n")
     }
     val env = pullEnvelope(spark, outRoot, matchlistKey, clock)
       .getOrElse(return None)
@@ -409,356 +361,6 @@ object Crawl {
     Walk(total, noData, matchBatches, timelineBatches, unprocessed)
   }
 
-  /** The matchlist walk DISTRIBUTED — the 100 TB analog of
-    * [[walkMatches]], the same move [[fetchMatchListsDistributed]] made
-    * for the fan-out: the reference's processor loop is the pipeline's
-    * 13-hour driver-sequential hot path (`EC2/processor.py:95-174`, 2 API
-    * requests per match id under one container's budget); at fleet scale
-    * the id list fans out over `numSlices` partitions, each running the
-    * SAME guarded match+timeline fetch pair under a per-partition SLICE
-    * of the request budget — every `(maxRequests, windowSec)` limit
-    * becomes `(maxRequests / numSlices, windowSec)` locally, so the
-    * aggregate across partitions never exceeds the global budget with no
-    * coordination (limiter/breaker/clock are CREATED on the executor via
-    * factories; driver-side state can't travel).
-    *
-    * Contract differences from the driver form, all declared:
-    *  - **Walk order** is sorted matchId (the determinism rule
-    *    [[runLeftovers]] already established — the reference's matchlist
-    *    is a Python set with no order of its own). Batch k of a kind is
-    *    EXACTLY docs [k·batchSize, (k+1)·batchSize) of the successful
-    *    fetches in that order, so batches are reproducible and equal to
-    *    a driver-form walk over the sorted list: the global index is
-    *    assigned by range-repartition + per-partition zip (two bounded
-    *    jobs), never a single-reducer window.
-    *  - **Flush cadence** (200 matches / 50 timelines,
-    *    `processor.py:160-174`) bounds each LANDED batch, exactly like
-    *    the reference's cadence bounds its in-memory buffer; `land`
-    *    calls arrive grouped per kind rather than interleaved (the
-    *    landed content per (kind, batch) is identical). Each batch is
-    *    parsed DISTRIBUTED — `spark.read.json` over the batch slice, no
-    *    driver-side doc buffering at all.
-    *  - **Deadline** is checked per partition on ITS clock: the
-    *    unprocessed set is the union of per-partition tails (the driver
-    *    form's tail is one contiguous suffix); no id is ever lost —
-    *    every id is exactly one of processed / no_data / unprocessed.
-    * CrawlSpec proves batches, leftovers, and report equal the driver
-    * form on the sorted list, and that each slice's request times
-    * respect its budget under a deterministic clock. */
-  def walkMatchesDistributed(ids: DataFrame,
-      fetchMatch: String => Resilience.Outcome[String],
-      fetchTimeline: String => Resilience.Outcome[String],
-      limits: Seq[(Int, Long)], numSlices: Int,
-      maxRetries: Int = 3, failureThreshold: Int = 5,
-      recoveryTimeoutSec: Long = 60L,
-      deadlineEpoch: Long = Long.MaxValue,
-      clockFactory: () => Resilience.Clock = () => Resilience.Clock.system,
-      source: String = "crawl",
-      matchBatchSize: Int = 200, timelineBatchSize: Int = 50,
-      land: (DataFrame, String, Int) => Unit): Walk = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val fetched = sliceFetch(ids, fetchMatch, fetchTimeline, limits,
-      numSlices, maxRetries, failureThreshold, recoveryTimeoutSec,
-      deadlineEpoch, clockFactory).cache()
-    try {
-      val total = fetched.filter(col("status") === "ok").count().toInt
-      val noData = fetched.filter(col("status") === "no_data").count().toInt
-      val unprocessed = fetched.filter(col("status") === "unprocessed")
-        .select(col("matchId")).as[String].collect().toSeq.sorted
-      var matchBatches = 0; var timelineBatches = 0
-      if (total > 0) {
-        val indexed = indexOk(fetched, numSlices).cache()
-        try {
-          def landKind(docCol: String, kind: String, batchSize: Int): Int = {
-            val nBatches = (total + batchSize - 1) / batchSize
-            var n = 0
-            while (n < nBatches) {
-              val batch = indexed
-                .filter(col("idx") >= n.toLong * batchSize &&
-                  col("idx") < (n + 1).toLong * batchSize)
-                .select(col(docCol)).as[String]
-              land(spark.read.json(batch).withColumn("source", lit(source)),
-                kind, n + 1)
-              n += 1
-            }
-            nBatches
-          }
-          matchBatches = landKind("matchDoc", "match", matchBatchSize)
-          timelineBatches = landKind("timelineDoc", "match_timeline", timelineBatchSize)
-        } finally indexed.unpersist()
-      }
-      Walk(total, noData, matchBatches, timelineBatches, unprocessed)
-    } finally fetched.unpersist()
-  }
-
-  /** The sliced-budget fetch phase shared by both distributed walks:
-    * `numSlices` partitions, each running the guarded match+timeline
-    * fetch pair under `(maxRequests / numSlices, windowSec)` with
-    * executor-created limiter/breaker/clock. One output row per id with
-    * status ok / no_data / unprocessed. */
-  private def sliceFetch(ids: DataFrame,
-      fetchMatch: String => Resilience.Outcome[String],
-      fetchTimeline: String => Resilience.Outcome[String],
-      limits: Seq[(Int, Long)], numSlices: Int, maxRetries: Int,
-      failureThreshold: Int, recoveryTimeoutSec: Long, deadlineEpoch: Long,
-      clockFactory: () => Resilience.Clock): DataFrame = {
-    require(numSlices > 0, s"numSlices=$numSlices")
-    val tightest = limits.map(_._1).min
-    require(numSlices <= tightest,
-      s"numSlices=$numSlices exceeds the tightest window budget $tightest — " +
-        "a slice needs at least one request per window")
-    val sliced = limits.map { case (maxReq, win) => (maxReq / numSlices, win) }
-    val spark = ids.sparkSession
-    import spark.implicits._
-    ids.select(col("matchId")).as[String]
-      .repartition(numSlices)
-      .mapPartitions { it =>
-        val clock = clockFactory()
-        val limiter = new Resilience.SlidingWindowRateLimiter(sliced, clock)
-        val breaker = new Resilience.CircuitBreaker(failureThreshold,
-          recoveryTimeoutSec, clock)
-        var expired = false
-        it.map { id =>
-          if (expired || clock.nowMs() / 1000 >= deadlineEpoch) {
-            expired = true // deadline observed once: the rest of this slice is tail
-            (id, null: String, null: String, "unprocessed")
-          } else {
-            val m = Resilience.guardedFetch(limiter, breaker, maxRetries, clock)(
-              _ => fetchMatch(id))
-            val t = Resilience.guardedFetch(limiter, breaker, maxRetries, clock)(
-              _ => fetchTimeline(id))
-            (m, t) match {
-              case (Some(md), Some(td)) => (id, md, td, "ok")
-              case _ => (id, null: String, null: String, "no_data")
-            }
-          }
-        }
-      }
-      .toDF("matchId", "matchDoc", "timelineDoc", "status")
-  }
-
-  /** Contiguous global index over the ok rows in sorted-matchId order:
-    * range partition (distributed sort) + per-partition zip with
-    * collected offsets — the batch boundary never funnels through one
-    * reducer. */
-  private def indexOk(fetched: DataFrame, numSlices: Int): DataFrame = {
-    val spark = fetched.sparkSession
-    import spark.implicits._
-    fetched.filter(col("status") === "ok")
-      .select(col("matchId"), col("matchDoc"), col("timelineDoc"))
-      .repartitionByRange(numSlices, col("matchId"))
-      .sortWithinPartitions(col("matchId"))
-      .as[(String, String, String)].rdd.zipWithIndex()
-      .map { case ((id, md, td), i) => (id, md, td, i) }
-      .toDF("matchId", "matchDoc", "timelineDoc", "idx")
-  }
-
-  /** [[walkMatchesDistributed]] with ONE-PASS batch landing — the scale
-    * form of the landing side (VERDICT r11 #2). The per-batch-callback
-    * walk above re-serializes on the driver: `landKind` runs one
-    * `filter(idx ∈ [n·B, (n+1)·B))` pass over the cached ok-set plus one
-    * driver-dispatched `spark.read.json` job per batch — at the
-    * reference's prod scale (20 k players × ≤100 ids → ~2 M ids → ~10 k
-    * batches, `EC2/processor.py:146-174`) that is ~10 k scheduled jobs
-    * each rescanning the cached frame. Here the batch number is DERIVED
-    * AS A COLUMN (`batch = floor(idx / batchSize) + 1`, 1-based like the
-    * loop form's `batch_<n>`) and every batch of a kind lands in one
-    * distributed pass: one schema-inference job over the ok docs + one
-    * `landAll(parsed, kind)` action, O(1) passes over the ok-set
-    * regardless of batch count.
-    *
-    * `landAll` receives the kind's ENTIRE parsed corpus — the same
-    * columns the loop form hands `land` (doc fields + `source`) plus the
-    * `batch` column — and lands it however it likes; the default in
-    * [[runProcessorDistributed]] is `partitionBy("batch")`, which keeps
-    * the reference's 200/50 envelope cadence as the on-disk batch unit
-    * (one directory per batch, contents equal to the loop form's
-    * `batch_<n>`) while writing them all in one job. Batch membership,
-    * walk order (sorted matchId), counts, and the leftover contract are
-    * those of [[walkMatchesDistributed]] — CrawlSpec pins the
-    * differential. Docs must not carry a top-level `batch` field (the
-    * column is ours; fail fast rather than silently shadow). */
-  def walkMatchesDistributedOnePass(ids: DataFrame,
-      fetchMatch: String => Resilience.Outcome[String],
-      fetchTimeline: String => Resilience.Outcome[String],
-      limits: Seq[(Int, Long)], numSlices: Int,
-      maxRetries: Int = 3, failureThreshold: Int = 5,
-      recoveryTimeoutSec: Long = 60L,
-      deadlineEpoch: Long = Long.MaxValue,
-      clockFactory: () => Resilience.Clock = () => Resilience.Clock.system,
-      source: String = "crawl",
-      matchBatchSize: Int = 200, timelineBatchSize: Int = 50,
-      inferenceSampleN: Int = DefaultInferenceSample,
-      landAll: (DataFrame, String) => Unit): Walk = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val fetched = sliceFetch(ids, fetchMatch, fetchTimeline, limits,
-      numSlices, maxRetries, failureThreshold, recoveryTimeoutSec,
-      deadlineEpoch, clockFactory).cache()
-    try {
-      val total = fetched.filter(col("status") === "ok").count().toInt
-      val noData = fetched.filter(col("status") === "no_data").count().toInt
-      val unprocessed = fetched.filter(col("status") === "unprocessed")
-        .select(col("matchId")).as[String].collect().toSeq.sorted
-      var matchBatches = 0; var timelineBatches = 0
-      if (total > 0) {
-        val indexed = indexOk(fetched, numSlices).cache()
-        try {
-          def landKind(docCol: String, kind: String, batchSize: Int): Int = {
-            // pass 1: schema inference — SAMPLED by default (first-N +
-            // top-level drift escalation, [[inferDocSchema]]); 0 = the
-            // faithful full-read inference
-            val docStrings = indexed.select(col(docCol)).as[String]
-            val schema =
-              if (inferenceSampleN > 0) inferDocSchema(docStrings, inferenceSampleN)
-              else spark.read.json(docStrings).schema
-            require(!schema.fieldNames.contains("batch"),
-              s"$kind docs carry a top-level 'batch' field — it would shadow " +
-                "the walk's batch column; use the per-batch land form")
-            // pass 2: parse + batch column + the single landAll action
-            val parsed = indexed
-              .select(from_json(col(docCol), schema).as("_doc"),
-                (floor(col("idx") / batchSize) + 1).cast("int").as("batch"))
-              .select(col("_doc.*"), col("batch"))
-              .withColumn("source", lit(source))
-            landAll(parsed, kind)
-            (total + batchSize - 1) / batchSize
-          }
-          matchBatches = landKind("matchDoc", "match", matchBatchSize)
-          timelineBatches = landKind("timelineDoc", "match_timeline", timelineBatchSize)
-        } finally indexed.unpersist()
-      }
-      Walk(total, noData, matchBatches, timelineBatches, unprocessed)
-    } finally fetched.unpersist()
-  }
-
-  /** Default sample size for one-pass landing's schema inference. */
-  val DefaultInferenceSample = 1024
-
-  /** JSON schema of a doc column from a BOUNDED sample, with top-level
-    * drift escalation (VERDICT r12 #6: the one-pass landing full-read
-    * every ok doc TWICE per kind — once to infer, once to parse; the
-    * inference pass only needs enough docs to see the schema).
-    *
-    * Shape: (1) infer over the first `sampleN` docs — a `limit` job that
-    * reads partitions until the sample fills, never the whole set;
-    * (2) one cheap canary pass over ALL docs comparing each doc's
-    * TOP-LEVEL key set (`json_object_keys` — no nested parse, no type
-    * inference) against the sampled schema; (3) only if some doc carries
-    * an unseen top-level key or fails the key scan entirely (malformed —
-    * `json_object_keys` = null) does a second inference run, over the
-    * sample PLUS the flagged docs, so drift costs exactly what drifted.
-    *
-    * Residual, stated honestly: drift NESTED under a top-level field the
-    * sample already saw (e.g. a new leaf inside `info`) does not trip a
-    * top-level canary — those leaves parse as absent (null) under the
-    * sampled schema. A deployment expecting nested drift passes
-    * `inferenceSampleN = 0` (faithful full inference) or declares the
-    * schema outright; the reference itself full-parses every doc
-    * (`EC2/processor.py:146-174`), which is what the 0 setting
-    * reproduces. Malformed docs keep their existing landing behavior
-    * (PERMISSIVE parse → null fields — rows, not exceptions) because
-    * flagged docs join the inference input, where the json reader
-    * surfaces them as a `_corrupt_record` column exactly as a full
-    * inference would. */
-  def inferDocSchema(docs: org.apache.spark.sql.Dataset[String],
-      sampleN: Int): org.apache.spark.sql.types.StructType = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sample = docs.limit(sampleN)
-    val sampled = spark.read.json(sample).schema
-    val known =
-      if (sampled.fieldNames.isEmpty) array().cast("array<string>")
-      else array(sampled.fieldNames.toSeq.map(lit): _*)
-    val keys = json_object_keys(col("value"))
-    val flagged = docs.toDF("value")
-      .filter(keys.isNull || size(array_except(keys, known)) > 0)
-      .as[String]
-    if (flagged.isEmpty) sampled
-    else spark.read.json(sample.union(flagged)).schema
-  }
-
-  /** [[runProcessor]] with the heavy walk on executors: same envelope
-    * pull / player-map re-land / leftover persistence / matchlist
-    * cleanup, but the per-id match+timeline loop runs through
-    * [[walkMatchesDistributed]] under a sliced request budget instead of
-    * the driver-sequential [[walkMatches]]. The faithful driver twin
-    * stays the default `run` path (the reference IS one container with
-    * one budget); this is the shape a 1000-executor deployment runs.
-    *
-    * Landing: with no custom `land`, batches land through
-    * [[walkMatchesDistributedOnePass]] — one `partitionBy` write per
-    * kind, with the partition directories renamed `batch=<n>` →
-    * `batch_<n>` afterward (driver-side fs renames, no jobs) so the
-    * on-disk layout equals the loop form's `outRoot/<kind>/batch_<n>`.
-    * A custom per-batch `land` callback keeps the loop walk — its
-    * contract is one DataFrame per batch. */
-  def runProcessorDistributed(spark: SparkSession, outRoot: String,
-      matchlistKey: String, window: Windows.WindowState,
-      fetchMatch: String => Resilience.Outcome[String],
-      fetchTimeline: String => Resilience.Outcome[String],
-      limits: Seq[(Int, Long)], numSlices: Int,
-      deadlineEpoch: Long = Long.MaxValue,
-      clockFactory: () => Resilience.Clock = () => Resilience.Clock.system,
-      source: String = "crawl",
-      matchBatchSize: Int = 200, timelineBatchSize: Int = 50,
-      land: (org.apache.spark.sql.DataFrame, String, Int) => Unit = null)
-      : Option[ProcessorReport] = {
-    import spark.implicits._
-    val driverClock = clockFactory()
-    val env = pullEnvelope(spark, outRoot, matchlistKey, driverClock)
-      .getOrElse(return None)
-    val pmKey = landPlayerMap(spark, outRoot, env, window)
-    val ids =
-      if (env.columns.contains("matchlist"))
-        env.select(explode(col("matchlist")).as("matchId"))
-      else spark.emptyDataset[String].toDF("matchId")
-    val walk = Option(land) match {
-      case Some(landFn) =>
-        walkMatchesDistributed(ids, fetchMatch, fetchTimeline,
-          limits, numSlices, deadlineEpoch = deadlineEpoch,
-          clockFactory = clockFactory, source = source,
-          matchBatchSize = matchBatchSize, timelineBatchSize = timelineBatchSize,
-          land = landFn)
-      case None =>
-        walkMatchesDistributedOnePass(ids, fetchMatch, fetchTimeline,
-          limits, numSlices, deadlineEpoch = deadlineEpoch,
-          clockFactory = clockFactory, source = source,
-          matchBatchSize = matchBatchSize, timelineBatchSize = timelineBatchSize,
-          landAll = (df, kind) => landBatchedJson(df, s"$outRoot/$kind"))
-    }
-    val leftoverKey = if (walk.unprocessed.nonEmpty) {
-      val key = s"backfill/leftovers/leftovers_${window.startEpoch}_" +
-        s"${window.endEpoch}_${walk.unprocessed.length}_matches"
-      Writers.saveLeftovers(walk.unprocessed.toDF("key"), s"$outRoot/$key")
-      Some(key)
-    } else None
-    Writers.deletePath(spark, s"$outRoot/$matchlistKey")
-    Some(ProcessorReport(walk.total, walk.noData, walk.matchBatches,
-      walk.timelineBatches, leftoverKey, pmKey))
-  }
-
-  /** Default one-pass landing: `partitionBy("batch")` JSON write (ONE
-    * job for every batch of the kind — `batch` is a data column, so the
-    * writer routes rows without an extra shuffle) followed by driver-side
-    * directory renames `batch=<n>` → `batch_<n>` for layout parity with
-    * the per-batch loop form. partitionBy drops the partition column
-    * from file content, so each `batch_<n>`'s rows equal the loop form's
-    * (doc fields + source). */
-  private[graft] def landBatchedJson(df: DataFrame, root: String): Unit = {
-    df.write.mode("overwrite").partitionBy("batch").json(root)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("batch=")) {
-        fs.rename(st.getPath,
-          new org.apache.hadoop.fs.Path(p, "batch_" + name.stripPrefix("batch=")))
-      }
-    }
-  }
-
   /** One leftover file's re-drive outcome. */
   final case class LeftoverReport(file: String, total: Int, noData: Int,
       drained: Boolean)
@@ -773,8 +375,15 @@ object Crawl {
     * drained (`leftover.py:213-221`), and once the deadline hits,
     * remaining files are skipped untouched (`api_expired` flag). Test
     * mode skips everything (`leftover.py:31-35` — re-driving thousands
-    * of leftovers during development), mirroring `RunConfig.isTest`. */
+    * of leftovers during development), mirroring `RunConfig.isTest`.
+    *
+    * `window` is the re-driving run's window: the default land path is
+    * `outRoot/<type>/redrive_<start>_<end>_<file>_<n>`, so re-driving
+    * the same cut file in two runs keeps both runs' batches. Listing,
+    * reads, writes and deletes all go through Hadoop `FileSystem`, so
+    * `outRoot` may be a plain path or any `file:`/`hdfs:`/`s3a:` URI. */
   def runLeftovers(spark: SparkSession, outRoot: String,
+      window: Windows.WindowState,
       fetchMatch: String => Resilience.Outcome[String],
       fetchTimeline: String => Resilience.Outcome[String],
       limiter: Resilience.SlidingWindowRateLimiter,
@@ -786,23 +395,26 @@ object Crawl {
       testMode: Boolean = false,
       land: (DataFrame, String, Int) => Unit = null): Seq[LeftoverReport] = {
     if (testMode) return Nil
-    val dir = new java.io.File(s"$outRoot/backfill/leftovers")
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("leftovers_")
-        && f.getName.endsWith("_matches"))
+    val dir = new org.apache.hadoop.fs.Path(s"$outRoot/backfill/leftovers")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("leftovers_")
+        && st.getPath.getName.endsWith("_matches"))
+      .map(_.getPath)
       .sortBy(_.getName)
     var expired = false
-    files.toSeq.flatMap { f =>
+    files.flatMap { f =>
       if (expired) None // api_expired: leave remaining files untouched
       else {
-        val path = f.getAbsolutePath
+        val path = f.toString
         // parquet carries no row order and the reference's matchlist is a
         // Python set (arbitrary order) — sorted ids are the deterministic
         // walk order, so a cut-and-overwritten tail is reproducible
         val ids = spark.read.parquet(path).collect().map(_.getString(0)).toSeq.sorted
         val landFn = Option(land).getOrElse {
           (df: DataFrame, kind: String, n: Int) =>
-            Writers.jsonDump(df, s"$outRoot/$kind/redrive_${f.getName}_$n")
+            Writers.jsonDump(df, s"$outRoot/$kind/redrive_${window.startEpoch}_" +
+              s"${window.endEpoch}_${f.getName}_$n")
         }
         val walk = walkMatches(spark, ids.toSeq, fetchMatch, fetchTimeline, limiter,
           breaker, deadlineEpoch, clock, source, matchBatchSize,
@@ -886,7 +498,7 @@ object Crawl {
       src.fetchMatch, src.fetchTimeline, limiter, breaker, deadlineEpoch,
       clock, source))
     val redriven =
-      try runLeftovers(spark, outRoot, src.fetchMatch, src.fetchTimeline,
+      try runLeftovers(spark, outRoot, window, src.fetchMatch, src.fetchTimeline,
         limiter, breaker, deadlineEpoch, clock, source, testMode = testMode)
       catch { case _: Exception => Nil } // non-critical by contract
     (key, report, redriven)

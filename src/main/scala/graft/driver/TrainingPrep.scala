@@ -3,6 +3,7 @@ package graft.driver
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.TextOps
+import graft.plans.PlanMetrics
 
 /** Worked composition: the LLM training-data prep chain a user runs over a
   * raw document corpus — the "switch from the reference and keep going"
@@ -117,10 +118,8 @@ object TrainingPrep {
     // live as long as the returned frame (same contract as the
     // clustering labels below).
     val sc = docs.sparkSession.sparkContext
-    def landed(desc: String, df: DataFrame): DataFrame = {
-      sc.setJobDescription(desc)
-      try df.localCheckpoint() finally sc.setJobDescription(null)
-    }
+    def landed(desc: String, df: DataFrame): DataFrame =
+      PlanMetrics.withJobDescription(sc, desc)(df.localCheckpoint())
     val exactDrops = landed("tp:exactDrops",
       narrowPairs.join(dupHashes, "content_hash")
         .filter(col(idCol) =!= col("_keep")).select(col(idCol)))

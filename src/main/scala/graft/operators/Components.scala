@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.plans.PlanMetrics
 
 /** Distributed connected components over an edge list — the CLUSTERING
   * stage of near-duplicate dedup that turns LSH candidate pairs into
@@ -90,8 +91,7 @@ object Components {
     // the construction step that paid them
     def checkpointTracked(desc: String, df: DataFrame): (DataFrame, Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet
-      sc.setJobDescription(desc)
-      val out = try df.localCheckpoint() finally sc.setJobDescription(null)
+      val out = PlanMetrics.withJobDescription(sc, desc)(df.localCheckpoint())
       (out, (sc.getPersistentRDDs.keySet -- before).toSet)
     }
     // label-frame checkpoint with the fixpoint sums FUSED into the

@@ -154,6 +154,16 @@ object PlanMetrics {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Run `body` under the Spark job description `desc`, so its jobs are
+    * labeled in [[measureJobs]] and the Spark UI, then put back whatever
+    * description the caller had set (clearing it instead would erase the
+    * caller's own label for every job after this step). */
+  def withJobDescription[A](sc: org.apache.spark.SparkContext, desc: String)(body: => A): A = {
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prior)
+  }
+
   /** One row of [[measureJobs]] output: a Spark job's identity, the
     * description the driver set for it (`sc.setJobDescription`, else
     * the call site), its task count and wall span, and its task-level

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.{Components, TextOps, Vectors}
+import graft.plans.PlanMetrics
 
 /** LLM-training-data pipeline operators (builder brief; SURVEY §7.2 step 7):
   * exact + MinHash-LSH + SimHash + n-gram-Jaccard dedup, cosine similarity
@@ -1520,9 +1521,8 @@ object LlmOps {
     val centroids = {
       val c = Vectors.buildCentroids(v, "vec_id", "embedding", k,
         graft.operators.AnnGeometry.lloydSamplePeriod(n, k))
-      s.sparkContext.setJobDescription("ivf:centroids")
-      try c.localCheckpoint()
-      finally s.sparkContext.setJobDescription(null)
+      PlanMetrics.withJobDescription(s.sparkContext, "ivf:centroids")(
+        c.localCheckpoint())
     }
     val q = v.filter($"vec_id" < 10)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))

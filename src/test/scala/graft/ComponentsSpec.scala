@@ -73,6 +73,17 @@ class ComponentsSpec extends SparkSpec {
     assert(labels.count() == 64)
   }
 
+  test("checkpoint job labels restore the caller's job description") {
+    // every round's localCheckpoint runs under its own label; the label
+    // the caller set before the call must still be in place after it
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: dedup stage")
+    try {
+      assert(cc(Seq((1L, 2L), (2L, 3L))).values.toSet == Set(1L))
+      assert(sc.getLocalProperty("spark.job.description") == "caller: dedup stage")
+    } finally sc.setJobDescription(null)
+  }
+
   test("the caller's edge pipeline is materialized exactly once") {
     // the round-15 dup_clusters find, pinned: CC consumes its edges frame
     // from several materializing actions (sym, labels0), and its own

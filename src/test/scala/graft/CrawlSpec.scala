@@ -81,282 +81,6 @@ class CrawlSpec extends SparkSpec {
         s"saw ${PageEvalProbe.evals.get()} row evals")
   }
 
-  test("fetchMatchListsDistributed: same envelope as the driver form; each slice honors its budget") {
-    import org.apache.spark.sql.functions.{col, explode, not}
-    val puuids = (1 to 24).map(i => f"p$i%02d")
-    val bad = Set("p05", "p17")
-    val window = Windows.WindowState(1000L, 2000L)
-    // 404 → immediate give-up (no backoff sleeps perturbing the logical
-    // clocks); everything else returns a deterministic id list
-    def fetch(p: String, w: Windows.WindowState): Resilience.Outcome[Seq[String]] =
-      if (bad(p)) Resilience.Status(404)
-      else Resilience.Ok(Seq(s"m-$p-1", s"m-$p-2", s"shared-${w.startEpoch}"))
-
-    // driver-sequential baseline
-    val base = Crawl.fetchMatchLists(puuids, window, fetch, limiter, breaker,
-      clock = noWait)
-    val baseOk = base.collect { case Crawl.Matches(p, ids) => p -> ids }.toMap
-    val baseFailed = base.collect { case Crawl.Failed(p) => p }.toSet
-
-    // distributed: 8 req / 120 s global budget over 4 slices → each
-    // partition-local limiter gets 2 req / 120 s; logical clocks start
-    // at 0 and advance only through limiter sleeps
-    FanoutProbe.reset()
-    val out = Crawl.fetchMatchListsDistributed(
-      puuids.toDF("puuid"), window, FanoutProbe.recording(fetch),
-      limits = Seq((8, 120L)), numSlices = 4,
-      clockFactory = () => FanoutProbe.newClock()).cache()
-
-    val gotOk = out.filter(not(col("failed")))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val gotFailed = out.filter(col("failed"))
-      .collect().map(_.getString(0)).toSet
-    assert(gotOk == baseOk, "distributed fan-out diverged from the driver form")
-    assert(gotFailed == baseFailed)
-
-    // identical ENVELOPE through the same downstream path
-    val ranks = Seq(("p01", 900)).toDF("puuid", "lp")
-    val envBase = Crawl.envelope(ranks,
-      baseOk.values.flatten.toSeq.toDF("matchId")).collect().toSeq
-    val envDist = Crawl.envelope(ranks,
-      out.filter(not(col("failed")))
-        .select(explode(col("matchIds")).as("matchId"))).collect().toSeq
-    assert(envBase == envDist)
-
-    // budget proof, per slice: on each partition's own clock, request
-    // i+2 is at least one full window after request i (2 req / 120 s);
-    // since every slice holds this independently, the aggregate under
-    // any common clock stays ≤ 8 req / 120 s
-    val byPart = FanoutProbe.calls()
-    assert(byPart.size == 4, s"expected 4 slices, saw ${byPart.keySet}")
-    assert(byPart.values.map(_.length).sum == 24)
-    byPart.foreach { case (part, ts) =>
-      // round-robin starts at a random offset, so slices hold 5-7 rows;
-      // the budget claim is spacing, which holds for any count: request
-      // i+2 sits a full window after request i (2 req / 120 s slice)
-      val sorted = ts.sorted
-      sorted.drop(2).zip(sorted).foreach { case (later, earlier) =>
-        assert(later >= earlier + 120000L,
-          s"partition $part burst past its slice: $sorted")
-      }
-    }
-    out.unpersist()
-  }
-
-  test("walkMatchesDistributed: batches/leftovers/report equal the driver form; each slice honors its budget") {
-    val ids = (1 to 30).map(i => f"m$i%02d") // already sorted: the declared walk order
-    val bad = Set("m05", "m17")
-    def doc(id: String) = s"""{"matchId":"$id","k":1}"""
-    def fm(id: String): Resilience.Outcome[String] =
-      if (bad(id)) Resilience.Status(404) else Resilience.Ok(doc(id))
-    def ft(id: String): Resilience.Outcome[String] = Resilience.Ok(doc(id))
-    def collectLand(buf: scala.collection.mutable.Map[(String, Int), Set[(String, Long, String)]])
-        : (DataFrame, String, Int) => Unit =
-      (df, kind, n) => {
-        buf((kind, n)) = df.collect()
-          .map(r => (r.getAs[String]("matchId"), r.getAs[Long]("k"),
-            r.getAs[String]("source"))).toSet
-        ()
-      }
-
-    // driver-sequential baseline at cadence (4, 2)
-    val baseLanded = scala.collection.mutable.Map[(String, Int), Set[(String, Long, String)]]()
-    val base = Crawl.walkMatches(spark, ids, fm, ft, limiter, breaker,
-      deadlineEpoch = Long.MaxValue, clock = noWait, source = "crawl",
-      matchBatchSize = 4, timelineBatchSize = 2, land = collectLand(baseLanded))
-
-    // distributed: 8 req / 120 s global over 4 slices → 2 req / 120 s each
-    FanoutProbe.reset()
-    val distLanded = scala.collection.mutable.Map[(String, Int), Set[(String, Long, String)]]()
-    val dist = Crawl.walkMatchesDistributed(ids.toDF("matchId"),
-      FanoutProbe.recordingDoc(fm), FanoutProbe.recordingDoc(ft),
-      limits = Seq((8, 120L)), numSlices = 4,
-      clockFactory = () => FanoutProbe.newClock(),
-      matchBatchSize = 4, timelineBatchSize = 2, land = collectLand(distLanded))
-
-    // report equality: totals, no-data count, batch counts, empty tail
-    assert((dist.total, dist.noData, dist.matchBatches, dist.timelineBatches) ==
-      (base.total, base.noData, base.matchBatches, base.timelineBatches))
-    assert(dist.total == 28 && dist.noData == 2 && dist.unprocessed.isEmpty)
-    // batch-for-batch landed content equality: walk order is sorted ids
-    // in BOTH forms, so batch k of each kind holds the same docs
-    assert(distLanded.keySet == baseLanded.keySet)
-    baseLanded.foreach { case (key, rows) =>
-      assert(distLanded(key) == rows, s"batch $key diverged from the driver form")
-    }
-
-    // budget proof per slice: 2 requests per id, 2 req / 120 s slice —
-    // on each partition's own clock request i+2 is a full window after
-    // request i, so the aggregate stays ≤ 8 req / 120 s
-    val byPart = FanoutProbe.calls()
-    assert(byPart.size == 4, s"expected 4 slices, saw ${byPart.keySet}")
-    assert(byPart.values.map(_.length).sum == 60) // 30 ids × 2 requests
-    byPart.foreach { case (part, ts) =>
-      val sorted = ts.sorted
-      sorted.drop(2).zip(sorted).foreach { case (later, earlier) =>
-        assert(later >= earlier + 120000L,
-          s"partition $part burst past its slice: $sorted")
-      }
-    }
-  }
-
-  test("walkMatchesDistributed deadline: per-slice tails, no id lost, leftovers sorted") {
-    val ids = (1 to 24).map(i => f"d$i%02d")
-    def ok(id: String): Resilience.Outcome[String] = Resilience.Ok(s"""{"matchId":"$id"}""")
-    val landed = scala.collection.mutable.ListBuffer[(String, Int, Set[String])]()
-    FanoutProbe.reset()
-    // 2 req / 120 s per slice: each id costs 2 requests, so a slice's
-    // second id pushes its logical clock to 120 s — the 100 s deadline is
-    // then observed before its THIRD id: exactly 2 ids processed per slice
-    val walk = Crawl.walkMatchesDistributed(ids.toDF("matchId"), ok, ok,
-      limits = Seq((8, 120L)), numSlices = 4, deadlineEpoch = 100L,
-      clockFactory = () => FanoutProbe.newClock(),
-      matchBatchSize = 200, timelineBatchSize = 50,
-      land = (df, kind, n) => {
-        landed += ((kind, n, df.collect().map(_.getAs[String]("matchId")).toSet)); ()
-      })
-    assert(walk.total == 8 && walk.noData == 0)
-    assert(walk.unprocessed.length == 16)
-    // exactly-one-of invariant: processed ∪ unprocessed = all, disjoint
-    val processed = landed.collect { case ("match", _, s) => s }.flatten.toSet
-    assert(processed.size == 8)
-    assert((processed ++ walk.unprocessed).toSet == ids.toSet)
-    assert(processed.intersect(walk.unprocessed.toSet).isEmpty)
-    // the leftover tail is sorted — ready for the deterministic re-drive
-    assert(walk.unprocessed == walk.unprocessed.sorted)
-    // remainder batches flushed under the cadence even on the cut walk
-    assert(walk.matchBatches == 1 && walk.timelineBatches == 1)
-  }
-
-  test("walkMatchesDistributedOnePass: batches equal the loop form; O(1) jobs regardless of batch count") {
-    val ids = (1 to 30).map(i => f"o$i%02d")
-    val bad = Set("o07", "o21")
-    def doc(id: String) = s"""{"matchId":"$id","k":1}"""
-    def fm(id: String): Resilience.Outcome[String] =
-      if (bad(id)) Resilience.Status(404) else Resilience.Ok(doc(id))
-    def ft(id: String): Resilience.Outcome[String] = Resilience.Ok(doc(id))
-    val nw = Resilience.Clock(() => 0L, _ => (), () => 0.5)
-
-    type Landed = scala.collection.mutable.Map[(String, Int), Set[(String, Long, String)]]
-    def newLanded: Landed = scala.collection.mutable.Map.empty
-
-    // loop-form baseline at cadence (4, 2)
-    val loopLanded = newLanded
-    val loop = Crawl.walkMatchesDistributed(ids.toDF("matchId"), fm, ft,
-      limits = Seq((1000, 1L)), numSlices = 4, clockFactory = () => nw,
-      matchBatchSize = 4, timelineBatchSize = 2,
-      land = (df, kind, n) => {
-        loopLanded((kind, n)) = df.collect()
-          .map(r => (r.getAs[String]("matchId"), r.getAs[Long]("k"),
-            r.getAs[String]("source"))).toSet
-        ()
-      })
-
-    def runOnePass(group: String, mBs: Int, tBs: Int, sink: Landed): Crawl.Walk = {
-      spark.sparkContext.setJobGroup(group, group)
-      try Crawl.walkMatchesDistributedOnePass(ids.toDF("matchId"), fm, ft,
-        limits = Seq((1000, 1L)), numSlices = 4, clockFactory = () => nw,
-        matchBatchSize = mBs, timelineBatchSize = tBs,
-        landAll = (df, kind) => {
-          df.collect().foreach { r =>
-            val key = (kind, r.getAs[Int]("batch"))
-            sink(key) = sink.getOrElse(key, Set.empty) +
-              ((r.getAs[String]("matchId"), r.getAs[Long]("k"),
-                r.getAs[String]("source")))
-          }
-          ()
-        })
-      finally spark.sparkContext.clearJobGroup()
-    }
-
-    val oneLanded = newLanded
-    val one = runOnePass("onepass_a", 4, 2, oneLanded)
-    // report + batch-for-batch landed content equal the loop form
-    assert((one.total, one.noData, one.matchBatches, one.timelineBatches) ==
-      (loop.total, loop.noData, loop.matchBatches, loop.timelineBatches))
-    assert(oneLanded.keySet == loopLanded.keySet)
-    loopLanded.foreach { case (key, rows) =>
-      assert(oneLanded(key) == rows, s"batch $key diverged from the loop form")
-    }
-
-    // O(1)-passes proof: halving both batch sizes DOUBLES the batch count
-    // but must not change the number of scheduled jobs — the loop form
-    // pays one inference + one land job per batch, the one-pass form one
-    // inference + one landAll action per KIND
-    val fineLanded = newLanded
-    val fine = runOnePass("onepass_b", 2, 1, fineLanded)
-    assert(fine.matchBatches == 2 * one.matchBatches &&
-      fine.timelineBatches == 2 * one.timelineBatches)
-    assert(fineLanded.values.flatten.toSet == oneLanded.values.flatten.toSet)
-    def jobs(g: String): Int = {
-      // statusTracker feeds from the async listener bus: poll to settle
-      var prev = -1
-      var cur = spark.sparkContext.statusTracker.getJobIdsForGroup(g).length
-      var tries = 0
-      while (cur != prev && tries < 50) {
-        prev = cur; Thread.sleep(100)
-        cur = spark.sparkContext.statusTracker.getJobIdsForGroup(g).length
-        tries += 1
-      }
-      cur
-    }
-    val (jA, jB) = (jobs("onepass_a"), jobs("onepass_b"))
-    assert(jA > 0 && jA == jB,
-      s"one-pass job count must be independent of batch count: $jA vs $jB")
-  }
-
-  test("runProcessorDistributed: same report/player-map/cleanup as the driver processor") {
-    val dir = Files.createTempDirectory("graft_proc_dist").toString
-    val w = Windows.WindowState(0, 2 * 24 * 3600)
-    val key = seedEnvelope(dir, w, (1 to 7).map(i => s"m$i"))
-    val landed = scala.collection.mutable.ListBuffer[(String, Int, Long)]()
-    def doc(id: String) = s"""{"matchId":"$id","k":1}"""
-    def fm(id: String): Resilience.Outcome[String] =
-      if (id == "m3") Resilience.Status(404) else Resilience.Ok(doc(id))
-    def ft(id: String): Resilience.Outcome[String] = Resilience.Ok(doc(id))
-    // locally scoped so the factory closure ships without the spec instance
-    val nw = Resilience.Clock(() => 0L, _ => (), () => 0.5)
-    val rep = Crawl.runProcessorDistributed(spark, dir, key, w, fm, ft,
-      limits = Seq((1000, 1L)), numSlices = 4,
-      clockFactory = () => nw,
-      matchBatchSize = 4, timelineBatchSize = 2,
-      land = (df, kind, n) => { landed += ((kind, n, df.count())); () }).get
-    // identical shape to the driver processor's run over the same envelope
-    assert(rep.total == 6 && rep.noData == 1)
-    assert(rep.matchBatches == 2 && rep.timelineBatches == 3)
-    assert(landed.collect { case ("match", _, n) => n }.toList == List(4, 2))
-    assert(landed.collect { case ("match_timeline", _, n) => n }.toList == List(2, 2, 2))
-    assert(rep.leftoverKey.isEmpty)
-    assert(spark.read.json(s"$dir/${rep.playerMapKey}").columns.contains("ranked_map"))
-    assert(!new java.io.File(s"$dir/$key").exists())
-  }
-
-  test("runProcessorDistributed default landing: one-pass partitionBy, batch_<n> layout parity") {
-    val dir = Files.createTempDirectory("graft_proc_dist_op").toString
-    val w = Windows.WindowState(0, 2 * 24 * 3600)
-    val key = seedEnvelope(dir, w, (1 to 7).map(i => s"m$i"))
-    def doc(id: String) = s"""{"matchId":"$id","k":1}"""
-    def fm(id: String): Resilience.Outcome[String] =
-      if (id == "m3") Resilience.Status(404) else Resilience.Ok(doc(id))
-    def ft(id: String): Resilience.Outcome[String] = Resilience.Ok(doc(id))
-    val nw = Resilience.Clock(() => 0L, _ => (), () => 0.5)
-    val rep = Crawl.runProcessorDistributed(spark, dir, key, w, fm, ft,
-      limits = Seq((1000, 1L)), numSlices = 4, clockFactory = () => nw,
-      matchBatchSize = 4, timelineBatchSize = 2).get
-    assert(rep.total == 6 && rep.matchBatches == 2 && rep.timelineBatches == 3)
-    // layout parity with the loop form: batch_<n> dirs under outRoot/<kind>,
-    // contents = parsed doc fields + source (partitionBy drops batch)
-    val b1 = spark.read.json(s"$dir/match/batch_1")
-    assert(b1.columns.toSet == Set("matchId", "k", "source"))
-    // sorted walk order: ok docs are m1,m2,m4,m5,m6,m7 → batch 1 holds 4
-    assert(b1.select("matchId").as[String].collect().sorted.toSeq ==
-      Seq("m1", "m2", "m4", "m5"))
-    assert(new java.io.File(s"$dir/match/batch_2").isDirectory)
-    assert((1 to 3).forall(n =>
-      new java.io.File(s"$dir/match_timeline/batch_$n").isDirectory))
-    assert(!new java.io.File(s"$dir/match/batch=1").exists())
-  }
-
   test("stampedPlayers evolves drifted tier schemas and renames rank (P3/P8)") {
     // the reference's highElo and LowElo entries carry different field
     // sets (league-v4 entries vs challengerleagues entries); the union
@@ -411,9 +135,11 @@ class CrawlSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_proc").toString
     val w = Windows.WindowState(0, 2 * 24 * 3600)
     val key = seedEnvelope(dir, w, (1 to 7).map(i => s"m$i"))
-    val landed = scala.collection.mutable.ListBuffer[(String, Int, Long)]()
+    val landed = scala.collection.mutable.ListBuffer[(String, Int, Seq[String])]()
     val land = (df: DataFrame, kind: String, n: Int) => {
-      landed += ((kind, n, df.count())); ()
+      assert(df.columns.toSet == Set("matchId", "k", "source"))
+      assert(df.select("source").as[String].collect().forall(_ == "crawl"))
+      landed += ((kind, n, df.select("matchId").as[String].collect().toSeq.sorted)); ()
     }
     def doc(id: String) = s"""{"matchId":"$id","k":1}"""
     def fm(id: String): Resilience.Outcome[String] =
@@ -424,10 +150,13 @@ class CrawlSpec extends SparkSpec {
     // m3 404s on the MATCH side → counted no_data, skipped on BOTH sides
     assert(rep.total == 6 && rep.noData == 1)
     // reference cadence at (4, 2): 6 docs → 2 match batches (4 + final 2),
-    // 3 timeline batches (2+2 + final 2)
+    // 3 timeline batches (2+2 + final 2); the walk follows the envelope's
+    // sorted matchlist, so batch k holds the k-th slice of the ok ids
     assert(rep.matchBatches == 2 && rep.timelineBatches == 3)
-    assert(landed.collect { case ("match", _, n) => n }.toList == List(4, 2))
-    assert(landed.collect { case ("match_timeline", _, n) => n }.toList == List(2, 2, 2))
+    assert(landed.collect { case ("match", n, ids) => (n, ids) }.toList == List(
+      (1, Seq("m1", "m2", "m4", "m5")), (2, Seq("m6", "m7"))))
+    assert(landed.collect { case ("match_timeline", n, ids) => (n, ids) }.toList == List(
+      (1, Seq("m1", "m2")), (2, Seq("m4", "m5")), (3, Seq("m6", "m7"))))
     assert(rep.leftoverKey.isEmpty)
     // rank map re-landed under player-maps/, matchlist envelope deleted
     assert(spark.read.json(s"$dir/${rep.playerMapKey}").columns.contains("ranked_map"))
@@ -462,10 +191,13 @@ class CrawlSpec extends SparkSpec {
       if (fetched == 3) now = 100_000_000L // past deadline for next check
       Resilience.Ok(s"""{"matchId":"$id"}""")
     }
+    val landed = scala.collection.mutable.ListBuffer[(String, Int, Set[String])]()
     val rep = Crawl.runProcessor(spark, dir, key, w, fm,
       id => Resilience.Ok(s"""{"matchId":"$id"}"""),
       limiter, breaker, deadlineEpoch = 1000L, clock = ticking,
-      land = (_, _, _) => ()).get
+      land = (df, kind, n) => {
+        landed += ((kind, n, df.select("matchId").as[String].collect().toSet)); ()
+      }).get
     // m1, m2, m3 processed (deadline observed before m4); leftovers start
     // at m4 — the current unprocessed id is NOT lost (processor.py:112
     // saves from i+1 and silently drops it; declared divergence)
@@ -474,6 +206,10 @@ class CrawlSpec extends SparkSpec {
     val rest = spark.read.parquet(s"$dir/${rep.leftoverKey.get}")
       .collect().map(_.getString(0)).toSet
     assert(rest == Set("m4", "m5", "m6", "m7"))
+    // the cut walk still flushes its remainders: one batch of each kind
+    assert(rep.matchBatches == 1 && rep.timelineBatches == 1)
+    assert(landed.toSet == Set(("match", 1, Set("m1", "m2", "m3")),
+      ("match_timeline", 1, Set("m1", "m2", "m3"))))
     // matchlist deleted even on the leftover path (stored safely above)
     assert(!new java.io.File(s"$dir/$key").exists())
   }
@@ -525,21 +261,34 @@ class CrawlSpec extends SparkSpec {
     // the same run's leftover phase is already past the deadline: the
     // fresh file is rewritten with its own (unshrunk) tail, not drained
     assert(red1.map(_.drained) == Seq(false))
-    // run 2, next window, nothing new to crawl, fresh time budget: the
-    // leftover phase re-drives and drains run 1's tail
+    // default landing: one directory per batch, keyed by the run's window
+    val b1 = spark.read.json(s"$dir/match/batch_${2 * day}_${4 * day}_1")
+    assert(b1.columns.toSet == Set("matchId", "source"))
+    assert(b1.select("matchId").as[String].collect().sorted.toSeq ==
+      Seq("m1", "m2", "m3", "m4"))
+    // run 2, next window, new ids to crawl, fresh time budget: the
+    // processor lands m7, m8 and the leftover phase drains run 1's tail
     val src2 = src1.copy(
-      fetchMatchList = (_, _) => Resilience.Ok(Nil),
+      fetchMatchList = (_, _) => Resilience.Ok(Seq("m7", "m8")),
       fetchMatch = id => Resilience.Ok(doc(id)))
     val (key2, rep2, red2) = Crawl.run(spark, dir, Windows.WindowState(4 * day, 6 * day),
       maxPlayers = 5, nowEpoch = 6 * day, src2, limiter, breaker, clock = noWait)
-    assert(key2.isDefined && rep2.get.total == 0)
+    assert(key2.isDefined && rep2.get.total == 2)
     assert(red2.map(r => (r.total, r.drained)) == Seq((2, true)))
     val loDir = new java.io.File(s"$dir/backfill/leftovers")
     assert(!Option(loDir.listFiles()).getOrElse(Array.empty)
       .exists(_.getName.endsWith("_matches")), "drained leftover file must be deleted")
+    // run 2 landed beside run 1, not over it: every id either run walked
+    // is on disk exactly once per kind
+    Seq("match", "match_timeline").foreach { kind =>
+      val ids = spark.read.json(s"$dir/$kind/*").select("matchId").as[String].collect()
+      assert(ids.sorted.toSeq == (1 to 8).map(i => s"m$i"), s"$kind: ${ids.sorted.toSeq}")
+    }
   }
 
-  test("leftover re-drive: drain deletes, deadline overwrites in place, rest untouched") {
+  /** The re-drive contract over leftover files in a fresh local directory,
+    * handed to `runLeftovers` as `root(dir)`. */
+  private def checkRedrive(root: String => String): Unit = {
     import graft.sinks.Writers
     val dir = Files.createTempDirectory("graft_redrive").toString
     val lo = s"$dir/backfill/leftovers"
@@ -549,8 +298,9 @@ class CrawlSpec extends SparkSpec {
     // fetcher-side PLAYER leftovers are not match ids: must be ignored
     Writers.saveLeftovers(Seq("p9").toDF("key"), s"$lo/players")
     def ok(id: String): Resilience.Outcome[String] = Resilience.Ok(s"""{"matchId":"$id"}""")
+    val w1 = Windows.WindowState(300, 400)
     // test mode skips everything (leftover.py:31-35)
-    assert(Crawl.runLeftovers(spark, dir, ok, ok, limiter, breaker,
+    assert(Crawl.runLeftovers(spark, root(dir), w1, ok, ok, limiter, breaker,
       clock = noWait, testMode = true).isEmpty)
     assert(spark.read.parquet(s"$lo/leftovers_0_100_2_matches").count() == 2)
     // deadline hits after a1, a2, b1: file A drains, B is cut at b2
@@ -562,8 +312,8 @@ class CrawlSpec extends SparkSpec {
       if (fetched == 3) now = 100_000_000L
       ok(id)
     }
-    val reps = Crawl.runLeftovers(spark, dir, fm, ok, limiter, breaker,
-      deadlineEpoch = 1000L, clock = ticking, land = (_, _, _) => ())
+    val reps = Crawl.runLeftovers(spark, root(dir), w1, fm, ok, limiter, breaker,
+      deadlineEpoch = 1000L, clock = ticking)
     assert(reps.map(r => (r.file, r.total, r.drained)) == Seq(
       ("leftovers_0_100_2_matches", 2, true),
       ("leftovers_100_200_3_matches", 1, false)))
@@ -573,6 +323,24 @@ class CrawlSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet == Set("b2", "b3"))
     assert(spark.read.parquet(s"$lo/leftovers_200_300_1_matches").count() == 1)
     assert(spark.read.parquet(s"$lo/players").count() == 1)
+    assert(new java.io.File(
+      s"$dir/match/redrive_300_400_leftovers_100_200_3_matches_1").isDirectory)
+    // a later run re-drives the same cut file B: its batch lands beside
+    // the first run's, so every re-driven id stays on disk exactly once
+    val reps2 = Crawl.runLeftovers(spark, root(dir), Windows.WindowState(400, 500),
+      ok, ok, limiter, breaker, clock = noWait)
+    assert(reps2.map(r => (r.file, r.total, r.drained)) == Seq(
+      ("leftovers_100_200_3_matches", 2, true), ("leftovers_200_300_1_matches", 1, true)))
+    val landed = spark.read.json(s"$dir/match/*").select("matchId").as[String].collect()
+    assert(landed.sorted.toSeq == Seq("a1", "a2", "b1", "b2", "b3", "c1"))
+  }
+
+  test("leftover re-drive: drain deletes, deadline overwrites in place, rest untouched") {
+    checkRedrive(identity)
+  }
+
+  test("leftover re-drive under a file: URI root lists and drains through FileSystem") {
+    checkRedrive(dir => new java.io.File(dir).toURI.toString.stripSuffix("/"))
   }
 
   test("fetcher flow e2e through Windows.step: cap, pre-truncation rank map, retry, dedup, leftovers") {
@@ -627,102 +395,21 @@ class CrawlSpec extends SparkSpec {
     val leftovers = spark.read.parquet(s"$dir/backfill/leftovers/players")
       .collect().map(_.getString(0)).toSet
     assert(leftovers == Set("p3"))
+    // the fan-out itself: one outcome per player in input order; the 404
+    // is Failed at once, the rest carry their ids
+    assert(Crawl.fetchMatchLists(Seq("p1", "p3"), Windows.WindowState(2 * day, 4 * day),
+      fetchMatches, limiter, breaker, clock = noWait) ==
+      Seq(Crawl.Matches("p1", Seq("m1", "m2")), Crawl.Failed("p3")))
     // state persisted only after the fetcher succeeded
     assert(graft.sinks.Writers.readState(statePath).contains((2 * day, 4 * day)))
   }
-
-  test("inferDocSchema: bounded sample, top-level drift escalates, late docs never parsed") {
-    import spark.implicits._
-    // 400 docs: homogeneous {"a": i} except — key drift at #300 (new
-    // top-level field), malformed at #350, TYPE drift at #399
-    val raw = (0 until 400).map { i =>
-      if (i == 300) s"""{"a":$i,"late":"drifted"}"""
-      else if (i == 350) "not json at all"
-      else if (i == 399) """{"a":"type-drifted"}"""
-      else s"""{"a":$i}"""
-    }
-    val docs = spark.createDataset(raw)
-    val schema = Crawl.inferDocSchema(docs, sampleN = 16)
-    // the canary caught the new top-level key (#300, far past the
-    // sample window) and handed the malformed doc (#350) to the json
-    // reader, which surfaces it as _corrupt_record — full-inference
-    // behavior for exactly the docs that needed it
-    assert(schema.fieldNames.toSet == Set("a", "late", "_corrupt_record"),
-      schema.treeString)
-    // the BOUNDEDNESS proof, behavioral not asserted-on-internals:
-    // doc #399 types `a` as a string, so a full inference would widen
-    // `a` to StringType. The sampled schema keeps LongType — the only
-    // way that happens is if #399 (same top-level keys, so never
-    // flagged) was never fed to type inference at all.
-    assert(schema("a").dataType == org.apache.spark.sql.types.LongType,
-      s"late docs leaked into inference: ${schema("a").dataType}")
-    // the full-read twin DOES widen — the documented difference the
-    // sampleN = 0 setting exists for
-    assert(spark.read.json(docs).schema("a").dataType ==
-      org.apache.spark.sql.types.StringType)
-
-    // no drift → the sample alone decides, second inference never runs
-    val clean = spark.createDataset((0 until 200).map(i => s"""{"a":$i}"""))
-    assert(Crawl.inferDocSchema(clean, sampleN = 16).fieldNames.toSeq == Seq("a"))
-
-    // all-malformed and empty inputs stay total (no exceptions)
-    val junk = spark.createDataset(Seq("x", "y"))
-    assert(Crawl.inferDocSchema(junk, 4).fieldNames.toSet == Set("_corrupt_record"))
-    assert(Crawl.inferDocSchema(spark.emptyDataset[String], 4).isEmpty)
-  }
 }
 
-/** Static page-evaluation counter (see FanoutProbe for why an object:
-  * task closures get serialized even in local mode, so a captured
-  * AtomicInteger would be a per-task copy). */
+/** Static page-evaluation counter. Closures reference this singleton by
+  * class — object members are not serialized with the closure — so in
+  * local mode the tasks and the asserting test share one counter (a
+  * captured AtomicInteger would be a per-task copy). */
 object PageEvalProbe {
   val evals = new java.util.concurrent.atomic.AtomicInteger(0)
   def reset(): Unit = evals.set(0)
-}
-
-/** Same-JVM side channel for the distributed fan-out spec. Closures
-  * reference this SINGLETON by class — object members are not serialized
-  * with the closure — so in local mode the executor tasks and the
-  * asserting test observe one shared instance. Each partition registers
-  * its own logical clock (starts at 0, advances only through limiter
-  * sleeps); the recording wrapper logs (partitionId, partition-local
-  * now) at every fetch call. */
-object FanoutProbe {
-  import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-  import java.util.concurrent.atomic.AtomicLong
-  private val clocks = new ConcurrentHashMap[Int, AtomicLong]()
-  private val times = new ConcurrentLinkedQueue[(Int, Long)]()
-
-  def reset(): Unit = { clocks.clear(); times.clear() }
-
-  def newClock(): Resilience.Clock = {
-    val now = new AtomicLong(0L)
-    clocks.put(org.apache.spark.TaskContext.getPartitionId(), now)
-    Resilience.Clock(() => now.get(),
-      ms => { if (ms > 0) now.addAndGet(ms); () }, () => 0.5)
-  }
-
-  def recording(
-      fetch: (String, Windows.WindowState) => Resilience.Outcome[Seq[String]])
-      : (String, Windows.WindowState) => Resilience.Outcome[Seq[String]] =
-    (p, w) => {
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      times.add((pid, clocks.get(pid).get()))
-      fetch(p, w)
-    }
-
-  /** Same side channel for the distributed match walk's doc fetches. */
-  def recordingDoc(fetch: String => Resilience.Outcome[String])
-      : String => Resilience.Outcome[String] =
-    id => {
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      times.add((pid, clocks.get(pid).get()))
-      fetch(id)
-    }
-
-  def calls(): Map[Int, Seq[Long]] = {
-    import scala.jdk.CollectionConverters._
-    times.iterator().asScala.toSeq.groupBy(_._1)
-      .view.mapValues(_.map(_._2)).toMap
-  }
 }
